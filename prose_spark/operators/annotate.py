@@ -21,15 +21,19 @@ Scale notes:
 
 from __future__ import annotations
 
+import logging
 import time
 from dataclasses import dataclass
 from typing import Callable
 
-import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from prose_spark.schemas import ANNOTATION_FIELDS
+
+_log = logging.getLogger(__name__)
 
 
 class DocumentTimeout(TimeoutError):
@@ -80,6 +84,10 @@ class AnnotateConfig:
     language: str = "en"
 
 
+# spread_compute_input warns once per process when it cannot inspect a plan
+_spread_fallback_logged = False
+
+
 def spread_compute_input(df: DataFrame) -> DataFrame:
     """Repartition a compute-bound stage's input to the session's
     parallelism when it arrives under-partitioned FROM A SCAN — a small
@@ -92,7 +100,12 @@ def spread_compute_input(df: DataFrame) -> DataFrame:
     frame, the caller chose that layout — e.g. a concurrency-controlled
     measurement leg or a co-location contract — and the spread must not
     override it. At scale inputs carry enough partitions and this whole
-    function is a no-op."""
+    function is a no-op.
+
+    A frame whose plan cannot be inspected (no ``_jdf`` or ``rdd`` on
+    Spark Connect, a JVM-side error) is returned unchanged, with one
+    ``logging`` warning per process; any other error propagates."""
+    global _spread_fallback_logged
     p = df.sparkSession.sparkContext.defaultParallelism
     try:
         if df.rdd.getNumPartitions() >= p:
@@ -101,7 +114,12 @@ def spread_compute_input(df: DataFrame) -> DataFrame:
         if ("Repartition" in plan or "Coalesce" in plan
                 or "InMemoryRelation" in plan):
             return df
-    except Exception:
+    except (AttributeError, Py4JError, PySparkNotImplementedError) as e:
+        if not _spread_fallback_logged:
+            _spread_fallback_logged = True
+            _log.warning(
+                "spread_compute_input: plan not inspectable (%s: %s); "
+                "the input keeps its partitioning", type(e).__name__, e)
         return df
     return df.repartition(p)
 

@@ -8,8 +8,7 @@ Pipeline:
    shingles (exact Jaccard distance <= threshold after band blocking;
    operators.dedup.banded_minhash_pairs). Banding turns the O(n^2)
    similarity join into an equi-join on band keys — the only shuffle
-   whose size matters at 10^12-document scale; a pyspark.ml
-   MinHashLSH cross-check variant is kept as lsh_candidate_pairs_ml;
+   whose size matters at 10^12-document scale;
 3. connected components over the edge set by alternating small-star /
    large-star label propagation (Kiveris et al., "Connected Components in
    MapReduce and Beyond") expressed as DataFrame self-joins, with
@@ -109,38 +108,6 @@ def lsh_candidate_pairs(
     ).select("a", "b")
 
 
-def lsh_candidate_pairs_ml(
-    forms: DataFrame,
-    jaccard_max_distance: float = 0.3,
-    num_hash_tables: int = 6,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """pyspark.ml MinHashLSH variant of lsh_candidate_pairs (kept for
-    cross-checking the native core against Spark ML's approxSimilarityJoin;
-    same true-Jaccard threshold semantics via keyDistance)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    shingled = forms.withColumn("grams", _char_grams("norm"))
-    tf = HashingTF(inputCol="grams", outputCol="features",
-                   numFeatures=num_features)
-    feats = tf.transform(shingled)
-    # zero vectors (empty grams) break MinHash; norms are non-empty so grams
-    # always has >= 1 element
-    mh = MinHashLSH(inputCol="features", outputCol="hashes",
-                    numHashTables=num_hash_tables, seed=42)
-    model = mh.fit(feats)
-    pairs = model.approxSimilarityJoin(
-        feats, feats, jaccard_max_distance, distCol="dist"
-    )
-    return (
-        pairs.select(
-            F.col("datasetA.norm").alias("a"), F.col("datasetB.norm").alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-
-
 def _edge_checksum(e: DataFrame) -> tuple[int, int]:
     """(count, sum of per-edge hashes) — an order-insensitive fingerprint
     of the (distinct) edge set, used as the fixed-point test."""
@@ -189,6 +156,15 @@ def _union_find_local(spark, pairs: list, node_list: list, id_type,
     )
 
 
+# driver heap of one collected (a, b) Row beyond its characters: the Row
+# tuple plus two str/int objects. Measured with tracemalloc over 20k
+# collected rows: 264 B retained a row for one-char (interned) ids, 373 B
+# for short distinct ids, 327 B for int64 ids. Counting only characters let
+# a duplicate-heavy input of short ids pass the byte cap and then collect
+# gigabytes.
+_COLLECTED_ROW_BYTES = 400
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
@@ -213,10 +189,12 @@ def connected_components(
     ``driver_max_bytes``, a driver-side union-find (same output contract)
     replaces ~2 shuffles+1 collect per round with one collect — the
     practical fast path for post-blocking entity graphs, which are tiny
-    relative to the corpus. The byte term makes the gate robust to a
-    long-surface vocabulary: 2M edges of 10-char norms fit a 24g driver
-    easily, 2M edges of 2KB surfaces would not. Above either bound (the
-    100 TB case) the distributed contraction runs unchanged.
+    relative to the corpus. The byte estimate counts the characters AND
+    a per-row heap cost of the collected rows (``_COLLECTED_ROW_BYTES``),
+    so neither a long-surface vocabulary (2KB norms) nor a
+    duplicate-heavy input of short ids can pass the cap and then
+    collect more than it allows. Above either bound (the 100 TB case)
+    the distributed contraction runs unchanged.
     """
     from pyspark.sql import types as T
 
@@ -244,7 +222,8 @@ def connected_components(
         # inputs to the distributed path — safe.
         row = raw.agg(*size_agg).collect()[0]
         n_raw = row["n"]
-        est_bytes = int(row["chars"]) if id_is_str else n_raw * 16
+        est_bytes = ((int(row["chars"]) if id_is_str else n_raw * 16)
+                     + n_raw * _COLLECTED_ROW_BYTES)
         if est_bytes <= driver_max_bytes:
             # the byte cap (checked above) bounds this collect. Collect
             # the RAW checkpointed edges in ONE shuffle-free job and do

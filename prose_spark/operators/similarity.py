@@ -83,16 +83,6 @@ def brute_force_topk(
     )
 
 
-def _dot_lit(vec_col, centroid: list[float]):
-    """Dot product of a vector column with a literal centroid (native)."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(F.col(vec_col), c, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def ivf_fit(corpus: DataFrame, n_cells: int = 16, id_col: str = "vec_id",
             vec_col: str = "embedding", lloyd_iters: int = 1,
             hash_fn: str = "xxhash64") -> list[list[float]]:
@@ -354,9 +344,9 @@ def embedding_near_dup_pairs(
 
 def _plane_weights(dim: int, n_planes: int, salt: str = "p") -> list[list[float]]:
     """Deterministic ±1 hyperplane weights from md5 parity of
-    (salt, plane, index) — computed in Python once and shipped as plan
-    literals, so signature evaluation is pure arithmetic (no per-element
-    hashing at runtime)."""
+    (salt, plane, index) — computed in Python once per signature UDF, so
+    signature evaluation is pure arithmetic (no per-element hashing at
+    runtime)."""
     import hashlib
 
     return [
@@ -369,40 +359,17 @@ def _plane_weights(dim: int, n_planes: int, salt: str = "p") -> list[list[float]
     ]
 
 
-def _signature(vec_col: str, dim: int, n_planes: int, salt: str = "p"):
-    """Random-hyperplane signature integer for one table: sign bits of
-    the projections onto ``n_planes`` deterministic ±1 planes."""
-    planes = F.array(*[
-        F.array(*[F.lit(x) for x in row])
-        for row in _plane_weights(dim, n_planes, salt)
-    ])
-    projs = F.transform(
-        planes,
-        lambda w: F.aggregate(
-            F.zip_with(F.col(vec_col), w, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    powers = F.array(*[F.lit(2 ** p) for p in range(n_planes)])
-    return F.aggregate(
-        F.zip_with(projs, powers,
-                   lambda x, pw: F.when(x >= 0, pw).otherwise(F.lit(0))),
-        F.lit(0),
-        lambda acc, b: acc + b,
-    )
-
-
 def _signatures_pandas(dim: int, n_planes: int, n_tables: int):
-    """Arrow-vectorized twin of _table_signatures: one numpy matmul per
-    batch computes ALL L x r plane projections ((batch, dim) @ (dim,
-    L*r)), sign bits fold into per-table signature ints. The interpreted
-    higher-order-function path costs ~2.5 ms/row at 192 planes (measured
-    — Catalyst evaluates the literal-matrix lambdas per element); numpy
-    does the same arithmetic in ~2 µs/row. Signatures only GATE
-    candidates — the exact cosine verify stays JVM-side — so float
-    summation-order differences vs the literal-matrix path can only
-    perturb which candidates are probed, never a verified value."""
+    """Per-table hyperplane signatures (OR-construction: a pair is a
+    candidate if ANY table's signatures collide) as an Arrow-batched
+    UDF: one numpy matmul per batch computes ALL L x r plane projections
+    ((batch, dim) @ (dim, L*r)), sign bits fold into per-table signature
+    ints. An interpreted higher-order-function expression over literal
+    plane matrices costs ~2.5 ms/row at 192 planes (measured — Catalyst
+    evaluates the lambdas per element); numpy does the same arithmetic
+    in ~2 µs/row. Signatures only GATE candidates — the exact cosine
+    verify stays JVM-side — so float summation order can only perturb
+    which candidates are probed, never a verified value."""
     import numpy as np
 
     flat = np.array(
@@ -423,51 +390,6 @@ def _signatures_pandas(dim: int, n_planes: int, n_tables: int):
         return pd.Series(list(S))
 
     return sigs
-
-
-def _table_signatures(vec_col: str, dim: int, n_planes: int, n_tables: int):
-    """array<struct<tbl,sig>> — one independent hyperplane signature per
-    hash table (OR-construction: a pair is a candidate if ANY table's
-    signatures collide, which is what keeps recall from collapsing as N
-    grows; a single AND-only table has a recall cliff). All L x r plane
-    projections are computed in ONE literal-matrix transform pass, then
-    sliced into per-table sign-bit integers — a single small expression
-    regardless of table count."""
-    flat = []
-    for t in range(n_tables):
-        flat.extend(_plane_weights(dim, n_planes, salt=f"t{t}p"))
-    planes = F.array(*[
-        F.array(*[F.lit(x) for x in row]) for row in flat
-    ])
-    projs = F.transform(
-        planes,
-        lambda w: F.aggregate(
-            F.zip_with(F.col(vec_col), w, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    powers = F.array(*[F.lit(2 ** p) for p in range(n_planes)])
-
-    # let-bind projs via single-element transform so the projection pass
-    # evaluates once per row even after projection collapse
-    return F.transform(
-        F.array(projs),
-        lambda pr: F.transform(
-            F.sequence(F.lit(0), F.lit(n_tables - 1)),
-            lambda t: F.struct(
-                t.cast("int").alias("tbl"),
-                F.aggregate(
-                    F.zip_with(
-                        F.slice(pr, t * n_planes + 1, n_planes), powers,
-                        lambda x, pw: F.when(x >= 0, pw).otherwise(F.lit(0)),
-                    ),
-                    F.lit(0),
-                    lambda acc, b: acc + b,
-                ).alias("sig"),
-            ),
-        ),
-    ).getItem(0)
 
 
 def lsh_topk(

@@ -486,10 +486,6 @@ _MONTH_NOUNS = frozenset(("january", "february", "march", "april",
                           "october", "november", "december"))
 
 
-def _code(tags: list[str]) -> str:
-    return "".join(_TAG_CODE.get(t, ".") for t in tags)
-
-
 def extract_triples_doc(tokens: list[dict]) -> list[dict]:
     """tokens: annotate() token dicts (ordered). -> triple dicts."""
     out: list[dict] = []
@@ -3321,51 +3317,47 @@ def annotate_and_extract_triples(
 
     df = spread_compute_input(df)
 
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    out_schema = T.StructType(key_fields + list(TRIPLE_TYPE.fields))
     if cfg is None:
         cfg = AnnotateConfig()
+
+    def doc_tokens(text):
+        try:
+            return annotate_document(text, cfg)[1]
+        except DocumentTimeout:
+            # per-document failure: skip the doc, never abort the task —
+            # but COUNT it so the job can report the drop
+            if timeout_acc is not None:
+                timeout_acc.add(1)
+            return None
+
+    return _emit_triple_rows(df, key_cols, text_col, doc_tokens)
+
+
+def extract_triples(df: DataFrame, key_cols: tuple[str, ...] = ("url",)) -> DataFrame:
+    """Annotated df -> long-format triples DataFrame (one row per triple)."""
+    return _emit_triple_rows(df, key_cols, "tokens", lambda tokens: tokens)
+
+
+def _emit_triple_rows(df: DataFrame, key_cols: tuple[str, ...], in_col: str,
+                      doc_tokens) -> DataFrame:
+    """The one triple-row emitter of both triple stages: a mapInPandas
+    over (key_cols, in_col) that emits, per document, its key columns
+    joined onto each triple of ``extract_triples_doc(doc_tokens(value))``
+    (a document whose ``doc_tokens`` is None emits nothing)."""
+    key_fields = [f for f in df.schema.fields if f.name in key_cols]
+    out_schema = T.StructType(key_fields + list(TRIPLE_TYPE.fields))
     col_names = [f.name for f in out_schema.fields]
 
     def run(batches):
         for pdf in batches:
             rows = []
             keys = pdf[list(key_cols)].to_dict("records")
-            for key_row, text in zip(keys, pdf[text_col]):
-                try:
-                    _, tokens, _ = annotate_document(text, cfg)
-                except DocumentTimeout:
-                    # per-document failure: skip the doc, never abort the
-                    # task — but COUNT it so the job can report the drop
-                    if timeout_acc is not None:
-                        timeout_acc.add(1)
-                    continue
-                for tr in extract_triples_doc(tokens):
+            for key_row, value in zip(keys, pdf[in_col]):
+                for tr in extract_triples_doc(doc_tokens(value)):
                     rows.append({**key_row, **tr})
             yield pd.DataFrame(rows, columns=col_names)
 
-    cols = list(key_cols) + [text_col]
-    return df.select(*cols).mapInPandas(run, schema=out_schema)
-
-
-def extract_triples(df: DataFrame, key_cols: tuple[str, ...] = ("url",)) -> DataFrame:
-    """Annotated df -> long-format triples DataFrame (one row per triple)."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    out_schema = T.StructType(key_fields + list(TRIPLE_TYPE.fields))
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            keys = pdf[list(key_cols)].to_dict("records")
-            for key_row, tokens in zip(keys, pdf["tokens"]):
-                for tr in extract_triples_doc(tokens):
-                    rows.append({**key_row, **tr})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
-            )
-
-    cols = list(key_cols) + ["tokens"]
-    return df.select(*cols).mapInPandas(run, schema=out_schema)
+    return df.select(*key_cols, in_col).mapInPandas(run, schema=out_schema)
 
 
 def triple_support(

@@ -399,8 +399,7 @@ _IMAGE_ENCODERS = (
 def generate_image_rows(n: int, seed: int = 42):
     """Yield (url, format_name, blob) — formats cycle png/bmp/ppm/
     webp/gif/tiff so one query exercises six real decoders (every
-    native image family the corpus-side encoders can produce; the
-    remaining decoders — JPEG, netpbm variants, RAS, SGI — are
+    native image family; the netpbm variants beyond P6 are
     torture-tested in tests/ with their own encoders)."""
     for i in range(n):
         name, enc = _IMAGE_ENCODERS[i % len(_IMAGE_ENCODERS)]

@@ -1,7 +1,7 @@
 """Ground-truth tests for the dependency-free GIF and BMP decoders
 (prose_spark/operators/multimodal.py `_decode_gif` / `_decode_bmp`).
 
-Same strategy as the PNG/JPEG suites: minimal TEST-SIDE ENCODERS
+Same strategy as the TIFF/WebP suites: minimal TEST-SIDE ENCODERS
 (struct-packed BMP; a real compress-style GIF LZW encoder using the
 standard giflib width rule — GIF has NO TIFF-style early change)
 produce genuine files from known pixel arrays, and the decoders must

@@ -1,7 +1,7 @@
 """Seeded media corpus (sources/media.py) + its driver queries.
 
-The torture coverage for the DECODERS lives in test_multimodal/test_jpeg/
-test_tiff; this file pins the product-side encoders feeding the driver's
+The torture coverage for the DECODERS lives in test_gif_bmp/test_tiff/
+test_webp; this file pins the product-side encoders feeding the driver's
 mm_* queries: determinism, losslessness against the real decoders, and
 the end-to-end Spark stage shape.
 """
@@ -127,3 +127,25 @@ def test_mm_driver_queries(spark):
     # the r7-verdict-#7 scalars are projected and finite
     assert all(0.0 <= r.peak <= 1.0 and 0.0 <= r.flatness <= 1.0
                for r in aud)
+
+
+@pytest.mark.parametrize("name", ["mm_image_stats", "mm_audio_stats"])
+def test_mm_queries_match_pinned_goldens(spark, name):
+    """The mm_* driver queries equal their pinned parquet goldens row for
+    row, compared exactly as scripts/check_oracles.py does (row count,
+    column set, order-insensitive value hash) — without building the
+    pages oracle that the full gate needs first."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from scripts.check_oracles import value_hash
+
+    sdf = entry.queries()[name](spark, "unused")
+    srows = [tuple(r) for r in sdf.collect()]
+    cur = duckdb.connect().execute(
+        f"SELECT * FROM read_parquet('{entry.golden_path(name)}/*.parquet')")
+    gcols = [d[0] for d in cur.description]
+    grows = cur.fetchall()
+    assert len(srows) == len(grows)
+    assert sorted(sdf.columns) == sorted(gcols)
+    assert value_hash(srows, sdf.columns) == value_hash(grows, gcols)

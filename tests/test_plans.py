@@ -97,6 +97,44 @@ def test_fused_pipeline_honors_caller_coalesce(spark, docs_path):
         lo.unpersist()
 
 
+def test_spread_fallback_is_logged_not_silent(spark, monkeypatch, caplog):
+    """A frame whose plan cannot be inspected comes back unchanged, with
+    ONE warning per process (not one per call); any other error raised
+    during inspection propagates instead of being swallowed."""
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkNotImplementedError
+
+    from prose_spark.operators import annotate as annotate_mod
+
+    df = spark.createDataFrame([("u", "t")], ["url", "text"])
+    cls = type(df)
+    for err in (AttributeError("_jdf"), Py4JError("gateway"),
+                PySparkNotImplementedError(
+                    errorClass="NOT_IMPLEMENTED",
+                    messageParameters={"feature": "rdd"})):
+        def no_plan(self, err=err):
+            raise err
+
+        monkeypatch.setattr(cls, "rdd", property(no_plan))
+        monkeypatch.setattr(annotate_mod, "_spread_fallback_logged", False)
+        caplog.clear()
+        with caplog.at_level("WARNING", logger=annotate_mod.__name__):
+            first = annotate_mod.spread_compute_input(df)
+            second = annotate_mod.spread_compute_input(df)
+        assert first is df and second is df
+        warned = [r for r in caplog.records
+                  if r.name == annotate_mod.__name__]
+        assert len(warned) == 1, warned
+        assert "plan not inspectable" in warned[0].getMessage()
+
+    def broken(self):
+        raise RuntimeError("not an introspection error")
+
+    monkeypatch.setattr(cls, "rdd", property(broken))
+    with pytest.raises(RuntimeError, match="not an introspection error"):
+        annotate_mod.spread_compute_input(df)
+
+
 def test_broadcast_join_for_small_dim(spark):
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")

@@ -1072,6 +1072,26 @@ def test_connected_components_gate_is_byte_aware(spark):
     assert stats3["path"] == "distributed", stats3
 
 
+def test_connected_components_gate_counts_row_heap(spark):
+    """The byte estimate must bound the collect by ROW COUNT too: 1,000
+    duplicate rows of one-char ids are 2,000 characters but ~260 KB of
+    collected Rows on the driver heap, so under a 100 KB cap they take
+    the distributed path — with the same labels as the local path."""
+    from prose_spark.operators.canonicalize import connected_components
+
+    dups = spark.createDataFrame([("a", "b")] * 1000, ["a", "b"])
+    stats: dict = {}
+    dist = {(r.node, r.comp) for r in connected_components(
+        dups, driver_threshold=1000, driver_max_bytes=100 << 10,
+        stats=stats).collect()}
+    assert stats["path"] == "distributed", stats
+    stats2: dict = {}
+    local = {(r.node, r.comp) for r in connected_components(
+        dups, driver_threshold=1000, stats=stats2).collect()}
+    assert stats2["path"] == "local", stats2
+    assert dist == local == {("a", "a"), ("b", "a")}
+
+
 def _counting_mentions(spark, rows, acc):
     """Mentions frame whose evaluation increments ``acc`` once per row —
     the probe for single-evaluation guarantees (no task retries in local

@@ -1,6 +1,6 @@
 """Lossless WebP (VP8L) decoder tests.
 
-Evidence layers, mirroring the GIF/TIFF/RAS pattern (test-side encoder
+Evidence layers, mirroring the GIF/TIFF pattern (test-side encoder
 round-trips + real third-party data + malformed contracts):
 
 1. a test-side VP8L encoder — written against RFC 9649 independently of
@@ -15,7 +15,8 @@ round-trips + real third-party data + malformed contracts):
    cross-format agreement set uses — it must decode through the same
    entropy core and match the logo's shape mask;
 3. malformed/unsupported contracts (truncated stream, bad signature,
-   lossy VP8 honesty stub).
+   the honesty stub for lossy VP8 and for the undecoded JPEG, Sun
+   Raster and SGI formats).
 """
 
 import glob
@@ -469,6 +470,18 @@ def test_real_webp_lossy_is_honest_stub():
     with pytest.raises(NotImplementedError, match="lossy WebP"):
         decode_image(blob)
     # fake mode falls back to the deterministic stub
+    assert decode_image(blob, fake=True).shape == (8, 8, 3)
+
+
+@pytest.mark.parametrize("name", ["python.jpg", "python.ras", "python.sgi"])
+def test_real_undecoded_formats_are_honest_stub(name):
+    """JPEG, Sun Raster and SGI have no native decoder: real third-party
+    files take the unsupported-format path, like lossy WebP."""
+    if not _IMGDATA:
+        pytest.skip("no imghdrdata fixtures")
+    blob = open(_IMGDATA[0] + "/" + name, "rb").read()
+    with pytest.raises(NotImplementedError, match="not natively decodable"):
+        decode_image(blob)
     assert decode_image(blob, fake=True).shape == (8, 8, 3)
 
 
